@@ -1,20 +1,70 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** One timed run of a query: wall seconds (of which `buildSecs` went to
+  * building the DataFrame, checkpoint and collect jobs included) and the
+  * work the [[RunStatusListener]] collector saw during it. */
+final case class Timed(secs: Double, buildSecs: Double, work: RunStatus)
+
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failed query reports duration -1 AND lands in an
   * "errors" object — failures must be visible, never silently fast.
+  *
+  * The timed action writes the query's whole output to the `noop` sink:
+  * the same computation `Verify` writes to parquet, with no column pruned
+  * away (a `count()` would let the optimizer drop UDF, kernel and
+  * aggregate columns).
   *
   * Noise resistance: each query is warmed once (unmeasured — codegen, JIT,
   * parquet footers) and then timed `SPARK_GRAFT_RUNS` times (default 3;
   * the exact-rank family gets at least 5 — see [[Bench.NoisyRankQueries]]);
   * the reported number is the MEDIAN, so one GC pause or contended-machine
   * blip cannot dominate a round's signal. The committed BENCH_LOCAL.json
-  * additionally carries per-query {median,min,max} spread plus MEASURED
-  * shuffle-write and spill bytes from the task metrics of the last timed
-  * run — the evidence behind every "this plan shuffles O(keys), not
-  * O(rows²)" claim, and the tripwire that catches a silently-acquired
-  * extra exchange or a spill regression between rounds.
+  * additionally carries per-query {median,min,max} spread plus the jobs,
+  * tasks, task seconds, shuffle-write and spill bytes of the median run —
+  * the evidence behind every "this plan shuffles O(keys), not O(rows²)"
+  * claim, and the tripwire that catches a silently-acquired extra
+  * exchange or a spill regression between rounds.
+  *
+  * `attempt` is the one timing path: `ScalingBench` and `ProfileQuery`
+  * call it too.
   */
 object Bench {
+
+  /** The timed action: the whole output, written to the `noop` sink. */
+  def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Warms `build` once (uncharged), then times it `runs` times; returns
+    * the timed runs in execution order. Each run is measured in isolation:
+    * the listener bus is drained before and after, and afterwards cached
+    * plans are dropped (so a later run neither reuses nor evicts them) and
+    * garbage is collected (so this run's heap pressure doesn't surface as
+    * a GC pause inside the next one's wall clock) — all uncharged. A
+    * failure in any run propagates. */
+  def attempt(spark: SparkSession, collector: RunStatusListener, runs: Int)(
+      build: => DataFrame): Seq[Timed] = {
+    val sc = spark.sparkContext
+    def once(): Timed = {
+      org.apache.spark.GraftBus.drain(sc)
+      val before = collector.status
+      val t0 = System.nanoTime()
+      val df = build
+      val t1 = System.nanoTime()
+      materialize(df)
+      val t2 = System.nanoTime()
+      spark.catalog.clearCache()
+      System.gc()
+      org.apache.spark.GraftBus.drain(sc)
+      Timed((t2 - t0) / 1e9, (t1 - t0) / 1e9, collector.status.since(before))
+    }
+    once()
+    (1 to runs).map(_ => once())
+  }
+
+  /** The run with the median wall time (the upper one for even counts). */
+  def median(ts: Seq[Timed]): Timed = ts.sortBy(_.secs).apply(ts.size / 2)
 
   /** The exact-rank (range-sort) query family measures noisier than the
     * rest — each run launches a range-partitioner sample job plus the
@@ -49,92 +99,37 @@ object Bench {
       graft.plans.GlobalRank.withNtile(r, Seq(col("r_regionkey")), 2, "b").count()
       spark.catalog.clearCache()
     }
-    var errors = Map.empty[String, String]
     // local-iteration filter (unset for driver runs → full sweep)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val collector = new RunStatusListener()
+    spark.sparkContext.addSparkListener(collector)
 
-    // Task-metric evidence: shuffle-write + spill bytes accumulated by a
-    // listener; per-query numbers are the DELTA across one timed run.
-    // Listener events drain async, so each snapshot waits (uncharged)
-    // until the counters STABILIZE — a fixed sleep would let one query's
-    // stragglers bleed into the next query's delta under GC pauses or
-    // machine contention, mis-attributing the committed tripwire bytes.
-    val shuffleBytes = new java.util.concurrent.atomic.LongAdder
-    val spillBytes = new java.util.concurrent.atomic.LongAdder
-    val taskEnds = new java.util.concurrent.atomic.LongAdder
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        Option(te.taskMetrics).foreach { tm =>
-          shuffleBytes.add(tm.shuffleWriteMetrics.bytesWritten)
-          spillBytes.add(tm.memoryBytesSpilled + tm.diskBytesSpilled)
-        }
-        taskEnds.increment()
-      }
-    })
-    // Poll until two consecutive 20ms reads agree (bounded at 2s): the
-    // bus is empty when no task-end has landed across a full interval.
-    def drainListenerBus(): Unit = {
-      var prev = (taskEnds.sum(), shuffleBytes.sum(), spillBytes.sum())
-      var stable = 0
-      val deadline = System.nanoTime() + 2000000000L
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val cur = (taskEnds.sum(), shuffleBytes.sum(), spillBytes.sum())
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-    }
-
-    // One attempt, measured in isolation: time the action, then drop cached
-    // plans (so a later attempt neither reuses nor evicts them) and collect
-    // garbage (so this attempt's heap pressure doesn't surface as a GC
-    // pause inside the next one's wall-clock) — both UNCHARGED.
-    def attempt(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Long, Long)] = {
-      drainListenerBus() // settle the PREVIOUS attempt's task events
-      val (sh0, sp0) = (shuffleBytes.sum(), spillBytes.sum())
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          errors += name -> e.toString.take(200); false
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      System.gc()
-      drainListenerBus() // settle THIS attempt's task events before snapshot
-      if (ok) Some((secs, shuffleBytes.sum() - sh0, spillBytes.sum() - sp0))
-      else None
-    }
-
+    var errors = Map.empty[String, String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_ .contains(name)) }
       .map { case (name, fn) =>
-        attempt(name, fn) match { // warmup; a failure here skips the runs
-          case None => name -> (Seq(-1.0), 0L, 0L)
-          case Some(_) =>
-            val nRuns = if (NoisyRankQueries(name)) math.max(runs, 5) else runs
-            val triples = (1 to nRuns).flatMap(_ => attempt(name, fn))
-            if (triples.isEmpty) name -> (Seq(-1.0), 0L, 0L)
-            else name -> (triples.map(_._1).sorted,
-              triples.last._2, triples.last._3)
+        val nRuns = if (NoisyRankQueries(name)) math.max(runs, 5) else runs
+        try name -> attempt(spark, collector, nRuns)(fn(spark, sfDir))
+        catch { case e: Throwable =>
+          errors += name -> e.toString.take(200); name -> Seq.empty[Timed]
         }
       }
-    def median(ts: Seq[Double]): Double = ts(ts.size / 2) // ts sorted, odd runs
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, (ts, _, _)) => jstr(k) + ":" + median(ts) }
+    def secs(ts: Seq[Timed]): Double = if (ts.isEmpty) -1.0 else median(ts).secs
+    val jstr = Verify.jsonString _
+    val qs = results.map { case (k, ts) => jstr(k) + ":" + secs(ts) }
       .mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
-    val total = results.collect { case (_, (ts, _, _)) if ts.head >= 0 => median(ts) }.sum
+    val total = results.collect { case (_, ts) if ts.nonEmpty => secs(ts) }.sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"sf":"$sfDir"}"""
     println(line)
-    // Also persist the full line (plus per-query spread + measured shuffle/
-    // spill bytes) to the repo: the driver's captured tail truncates at
-    // 2000 chars, which hides a third of the per-query timings — the
-    // committed file keeps rounds diffable.
-    val stats = results.map { case (k, (ts, sh, sp)) =>
-      jstr(k) + s""":{"median":${median(ts)},"min":${ts.head},"max":${ts.last},"shuffle_mb":${math.round(sh / 1e4) / 100.0},"spill_mb":${math.round(sp / 1e4) / 100.0}}"""
+    // Also persist the full line, plus per-query spread and the median
+    // run's work counts, to a file: a captured stdout tail may be cut
+    // short, and the committed file keeps rounds diffable.
+    def mb(bytes: Long): Double = math.round(bytes / 1e4) / 100.0
+    val stats = results.collect { case (k, ts) if ts.nonEmpty =>
+      val byTime = ts.map(_.secs).sorted
+      val w = median(ts).work
+      jstr(k) + s""":{"median":${secs(ts)},"min":${byTime.head},"max":${byTime.last},"jobs":${w.jobsStarted},"tasks":${w.tasksCompleted},"task_s":${w.taskTimeMs / 1e3},"shuffle_mb":${mb(w.shuffleWriteBytes)},"spill_mb":${mb(w.spillBytes)}}"""
     }.mkString("{", ",", "}")
     val fileLine = line.dropRight(1) + s""","stats":$stats}"""
     try {

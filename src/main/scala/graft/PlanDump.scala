@@ -1,13 +1,24 @@
 package graft
 
-/** Plan-evidence dump: writes the FORMATTED physical plan of each
-  * headline query to bench/PLANS.md so the plan-shape claims (pushdown,
-  * pruning, broadcast choice, keyed windows, no cartesian products) are
-  * reviewable as a committed artifact and diffable between rounds — a
-  * silently-acquired exchange or a lost PushedFilters shows up in the
-  * diff before it shows up in the bench.
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Plan-evidence dump: the FORMATTED physical plans each query EXECUTED,
+  * so the plan-shape claims (pushdown, pruning, broadcast choice, keyed
+  * windows, no cartesian products) are reviewable as a committed artifact
+  * and diffable between rounds — a silently-acquired exchange or a lost
+  * PushedFilters shows up in the diff before it shows up in the bench.
   *
-  * Run: sbt "runMain graft.PlanDump" (optional arg: sf dir)
+  * Each query is built and written in full to the `noop` sink (the action
+  * `Bench` times) under a `QueryExecutionListener`; every execution it
+  * records — the build-time checkpoint and collect jobs, then the write —
+  * is dumped in order as its final adaptive plan (`isFinalPlan=true`).
+  *
+  * Run: sbt "runMain graft.PlanDump [sfDir [query ...]]"
+  *  - no query names: the headline set, written to bench/PLANS.md
+  *    (override: SPARK_GRAFT_PLANS_OUT);
+  *  - query names: those queries, printed to stdout.
   */
 object PlanDump {
   private val Headline = Seq(
@@ -71,29 +82,52 @@ object PlanDump {
     "unigram_lm_train",    // EM over the vocab table, 1-row ok-set broadcasts
     "msprt_peek")          // filtered-sequence look explode + keyed agg
 
+  /** Runs `action` and returns every query execution it completed, in
+    * order, with the name of the action that ran it. */
+  def executions(spark: SparkSession)(action: => Unit): Seq[(String, QueryExecution)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(name -> qe)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try action
+    finally {
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // keep plans LAZY: the rank/LM family eagerly localCheckpoints its
-    // small outputs (graft.plans.Eager) to release internal caches, which
-    // would collapse the dumped plan to a checkpoint scan — the whole
-    // point of this artifact is the FULL operator plan
-    System.setProperty("graft.plans.lazy", "true")
+    val names = args.toSeq.drop(1)
+    names.foreach(n => require(SparkEntry.queries.contains(n), s"unknown query: $n"))
     val spark = GraftSession.local(8, "graft-plan-dump")
-    val sb = new StringBuilder
-    sb.append("# Headline query plans (generated by graft.PlanDump — do not edit)\n\n")
-    sb.append(s"Source: `$sfDir`; mode: formatted physical plan.\n")
-    val dumped = Headline.filter(SparkEntry.queries.contains)
-    dumped.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n").append(plan.trim).append("\n```\n")
+    def render(name: String): String = {
+      val ran = executions(spark)(Bench.materialize(SparkEntry.queries(name)(spark, sfDir)))
+      spark.catalog.clearCache()
+      ran.zipWithIndex.map { case ((action, qe), i) =>
+        s"\n### ${i + 1}/${ran.size}: $action\n\n```\n" +
+          qe.explainString(FormattedMode).trim + "\n```\n"
+      }.mkString(s"\n## $name\n", "", "")
     }
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "/root/repo/bench/PLANS.md"))
-    Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.writeString(out, sb.toString)
-    println(s"[plans] wrote ${dumped.size} plans to $out")
+    if (names.nonEmpty) names.foreach(n => print(render(n)))
+    else {
+      val sb = new StringBuilder
+      sb.append("# Headline query plans (generated by graft.PlanDump — do not edit)\n\n")
+      sb.append(s"Source: `$sfDir`; mode: formatted physical plans as executed " +
+        "(build-time jobs, then the full `noop` write).\n")
+      val dumped = Headline.filter(SparkEntry.queries.contains)
+      dumped.foreach(name => sb.append(render(name)))
+      val out = java.nio.file.Paths.get(
+        sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "bench/PLANS.md"))
+      Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.writeString(out, sb.toString)
+      println(s"[plans] wrote ${dumped.size} queries' plans to $out")
+    }
     spark.stop()
   }
 }

@@ -4,7 +4,8 @@ package graft
   * where the wall-clock goes — DataFrame construction, job/stage counts,
   * per-stage task time, shuffle bytes — so optimization targets the real
   * cost, not a guess. Output is human-readable, never part of the bench
-  * contract.
+  * contract. Runs go through `Bench.attempt`, so the profile is of the
+  * same full-output action the bench times.
   *
   * Run: ProfileQuery <query> [sfDir] [runs]
   */
@@ -16,51 +17,30 @@ object ProfileQuery {
     val spark = GraftSession.local(GraftSession.envCores, "graft-profile")
     val fn = SparkEntry.queries(name)
 
-    case class StageRow(id: Int, nTasks: Int, wallMs: Long, taskMs: Long,
-                        shuffleWrite: Long, name: String)
-    val stages = new scala.collection.mutable.ArrayBuffer[StageRow]
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L)
-        stages.synchronized {
-          stages += StageRow(si.stageId, si.numTasks, wall,
-            si.taskMetrics.executorRunTime,
-            si.taskMetrics.shuffleWriteMetrics.bytesWritten,
-            si.name.takeWhile(_ != '\n').take(60))
-        }
-      }
-    })
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.StageInfo]
+    val collector = new RunStatusListener(onStage = si => stages.add(si))
+    spark.sparkContext.addSparkListener(collector)
+    val timed = Bench.attempt(spark, collector, runs)(fn(spark, sfDir))
 
-    // warmup (codegen, JIT, parquet footers)
-    fn(spark, sfDir).count()
-    spark.catalog.clearCache()
-    System.gc()
-    Thread.sleep(300)
-
-    for (r <- 1 to runs) {
-      stages.synchronized(stages.clear()); jobs.set(0)
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.count()
-      val t2 = System.nanoTime()
-      Thread.sleep(400) // let listener drain
-      val ss = stages.synchronized(stages.toVector).sortBy(-_.wallMs)
-      val stageWall = ss.map(_.wallMs).sum
-      println(f"== run $r: total ${(t2 - t0) / 1e9}%.3fs  build ${(t1 - t0) / 1e9}%.3fs  " +
-        f"exec ${(t2 - t1) / 1e9}%.3fs  jobs ${jobs.get}  stages ${ss.size}  " +
-        f"sum(stage wall) ${stageWall / 1e3}%.3fs")
-      if (r == runs)
-        ss.take(20).foreach(s => println(
-          f"   stage ${s.id}%4d tasks ${s.nTasks}%3d wall ${s.wallMs}%6dms taskSum ${s.taskMs}%6dms " +
-          f"shW ${s.shuffleWrite / 1024}%8dKB  ${s.name}"))
-      spark.catalog.clearCache()
-      System.gc()
+    timed.zipWithIndex.foreach { case (t, i) =>
+      val w = t.work
+      println(f"== run ${i + 1}: total ${t.secs}%.3fs  build ${t.buildSecs}%.3fs  " +
+        f"exec ${t.secs - t.buildSecs}%.3fs  jobs ${w.jobsStarted}  " +
+        f"stages ${w.stagesCompleted}  tasks ${w.tasksCompleted}  " +
+        f"task time ${w.taskTimeMs / 1e3}%.3fs  shW ${w.shuffleWriteBytes / 1024}KB  " +
+        f"spill ${w.spillBytes / 1024}KB")
     }
+    // the last run's stages are the last ones the collector saw
+    import scala.jdk.CollectionConverters._
+    val last = stages.asScala.toVector.takeRight(timed.last.work.stagesCompleted.toInt)
+    def wallMs(si: org.apache.spark.scheduler.StageInfo): Long =
+      (for { s <- si.submissionTime; c <- si.completionTime } yield c - s).getOrElse(-1L)
+    last.sortBy(-wallMs(_)).take(20).foreach(si => println(
+      f"   stage ${si.stageId}%4d tasks ${si.numTasks}%3d wall ${wallMs(si)}%6dms " +
+      f"taskSum ${si.taskMetrics.executorRunTime}%6dms " +
+      f"shW ${si.taskMetrics.shuffleWriteMetrics.bytesWritten / 1024}%8dKB  " +
+      si.name.takeWhile(_ != '\n').take(60)))
     spark.stop()
   }
 }

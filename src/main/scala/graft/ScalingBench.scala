@@ -6,7 +6,8 @@ package graft
   * a plan that is secretly quadratic (all-pairs, single-partition window,
   * corpus-sized broadcast) shows a ratio far above the data growth; a
   * healthy shuffle-on-key plan tracks it or stays below (fixed overhead
-  * amortizes). Same noise discipline as [[Bench]]: warm once, median of
+  * amortizes). Same timing path as [[Bench]] (`Bench.attempt`): the full
+  * output written to the `noop` sink, warm once, median of
   * `SPARK_GRAFT_RUNS` (default 3) per (query, sf).
   *
   * Run: sbt "runMain graft.ScalingBench"
@@ -77,18 +78,11 @@ object ScalingBench {
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(3))
     val spark = GraftSession.local(GraftSession.envCores, "graft-scaling-bench")
 
-    def timeOnce(name: String, sfDir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); System.gc()
-      secs
-    }
-    def median(name: String, sfDir: String): Double = {
-      timeOnce(name, sfDir) // warmup, uncharged
-      val ts = (1 to runs).map(_ => timeOnce(name, sfDir)).sorted
-      ts(ts.size / 2)
-    }
+    val collector = new RunStatusListener()
+    spark.sparkContext.addSparkListener(collector)
+    def median(name: String, sfDir: String): Double =
+      Bench.median(Bench.attempt(spark, collector, runs)(
+        SparkEntry.queries(name)(spark, sfDir))).secs
 
     val rows = Headline.filter(SparkEntry.queries.contains).map { name =>
       val Seq(small, large) = sfs.map(d => median(name, d))

@@ -8,24 +8,13 @@ import org.apache.spark.sql.DataFrame
   * range-sorted frame, the n-gram type tables) can be unpersisted
   * deterministically instead of leaking for the session.
   *
-  * The idiom is OPTIONAL by process flag (`-Dgraft.plans.lazy=true`):
-  * plan-evidence tooling (PlanDump) needs the FULL operator plan to
-  * survive into the committed artifact — an eager checkpoint would
-  * collapse it to a checkpoint scan — and a single-query batch job that
-  * exits right after its one action can skip the extra materialization
-  * job entirely. Under the flag both the checkpoint AND the release are
-  * skipped (the caches must outlive the returned plan); the caches then
-  * live until the short process exits.
+  * The checkpoint is a job of its own, run while the DataFrame is built;
+  * its plan is one of the executed plans `PlanDump` records for the query.
   */
 object Eager {
 
-  /** True unless the process opted into lazy plans. */
-  def enabled: Boolean = !java.lang.Boolean.getBoolean("graft.plans.lazy")
-
-  /** Materialize `df` eagerly and run `release` (cache unpersists) —
-    * or, under `graft.plans.lazy`, return the lazy plan untouched and
-    * keep its caches alive. */
-  def checkpoint(df: DataFrame)(release: => Unit): DataFrame =
-    if (enabled) { val out = df.localCheckpoint(true); release; out }
-    else df
+  /** Materialize `df` eagerly, then run `release` (cache unpersists). */
+  def checkpoint(df: DataFrame)(release: => Unit): DataFrame = {
+    val out = df.localCheckpoint(true); release; out
+  }
 }

@@ -98,7 +98,6 @@ object AnalyticsPack extends QueryPack {
     val nodeMeta = nodes.join(deg, Seq("node"), "left")
       .repartition(col("node")).sortWithinPartitions("node").cache()
     val nCnt = nodeMeta.agg(count(lit(1)).cast("double").as("n_nodes"))
-    val eager = graft.plans.Eager.enabled
     // AQE materializes every query stage as its own job; across K
     // iterations of small fixed-shape stages that is ~10 driver
     // round-trips per iteration of pure scheduling latency. The loop's
@@ -106,38 +105,28 @@ object AnalyticsPack extends QueryPack {
     // join), so run the ITERATION BODY with AQE off and restore after —
     // the returned plan (and every other query) keeps AQE.
     val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-    if (eager) s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // node count: collected ONCE for the whole loop (it is one row over
-      // the cached node frame). Under graft.plans.lazy no action may run,
-      // so the plan-dump path keeps the declarative broadcast scalar.
-      val nOpt: Option[Double] =
-        if (eager) Some(nCnt.head.getDouble(0)) else None
-      def nCol = nOpt.map(lit).getOrElse(col("n_nodes"))
-      def withN(df: DataFrame) =
-        if (eager) df else df.crossJoin(broadcast(nCnt))
-      var ranks = withN(nodeMeta)
+      // the cached node frame)
+      val nCol = lit(nCnt.head.getDouble(0))
+      var ranks = nodeMeta
         .select(col("node"), round(lit(1.0) / nCol, 8).as("r"), col("deg"))
       for (_ <- 1 to PrIters) {
         // the fused pass: one shuffle carries both the per-dst
         // contributions and the dangling-mass sentinel row
-        var agg = ranks.join(edges, col("node") === col("src"), "left")
+        val agg = ranks.join(edges, col("node") === col("src"), "left")
           .select(coalesce(col("dst"), lit(PrDangKey)).as("__n"),
             when(col("dst").isNotNull, col("r") / col("deg"))
               .otherwise(col("r")).as("__w"))
           .groupBy("__n").agg(sum("__w").as("__sum"))
-        if (eager) agg = agg.localCheckpoint(true)
+          .localCheckpoint(true)
         val contrib = agg.filter(col("__n") =!= PrDangKey)
           .select(col("__n").as("node"), col("__sum").as("contrib"))
-        val dang = agg.filter(col("__n") === PrDangKey)
-          .agg(coalesce(sum("__sum"), lit(0.0)).as("dm"))
-        // dangling mass: O(1) rows off the checkpointed aggregate (eager),
-        // or the declarative broadcast scalar (plan-dump mode)
-        val dmCol =
-          if (eager) lit(dang.head.getDouble(0)) else col("dm")
-        def withDm(df: DataFrame) =
-          if (eager) df else df.crossJoin(broadcast(dang))
-        ranks = withDm(withN(nodeMeta))
+        // dangling mass: O(1) rows off the checkpointed aggregate
+        val dmCol = lit(agg.filter(col("__n") === PrDangKey)
+          .agg(coalesce(sum("__sum"), lit(0.0))).head.getDouble(0))
+        ranks = nodeMeta
           .join(contrib, Seq("node"), "left")
           .select(col("node"), round(
             lit(0.15) / nCol + lit(0.85) *
@@ -303,7 +292,7 @@ object AnalyticsPack extends QueryPack {
     var lab = ed.select(col("s").as("node")).distinct()
       .withColumn("lbl", col("node"))
     val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-    if (graft.plans.Eager.enabled) s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
     try for (_ <- 1 to LpaIters) {
       // ONE exchange per round: repartition by d once — HashPartitioning(d)
       // satisfies the clustering of BOTH the (d, lbl) count and the argmax
@@ -316,7 +305,7 @@ object AnalyticsPack extends QueryPack {
         .groupBy(col("d").as("node"))
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l")))
           .getField("l").as("lbl"))
-      if (graft.plans.Eager.enabled) lab = lab.localCheckpoint(true)
+        .localCheckpoint(true)
     } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
     lab.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("size"), min("node").as("min_member"))

@@ -43,30 +43,30 @@ object CrossValidatorCustom extends Logging {
     // (ref: CrossValidatorCustom parallelism, default 3)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, tuning.parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val futures = grids.map { pm =>
-      pm -> (0 until k).map { f =>
-        Future {
-          val train = folded.filter(col("__fold") =!= f)
-          val valid = folded.filter(col("__fold") === f)
-          val model = est.copy(pm).fit(train).asInstanceOf[Transformer]
-          val m = eval.evaluate(model.transform(valid))
-          logInfo(s"cv fold=$f params=$pm metric=${tuning.evalMetric}=$m")
-          m
+    val avg = try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val futures = grids.map { pm =>
+        pm -> (0 until k).map { f =>
+          Future {
+            val train = folded.filter(col("__fold") =!= f)
+            val valid = folded.filter(col("__fold") === f)
+            val model = est.copy(pm).fit(train).asInstanceOf[Transformer]
+            val m = eval.evaluate(model.transform(valid))
+            logInfo(s"cv fold=$f params=$pm metric=${tuning.evalMetric}=$m")
+            m
+          }
         }
       }
-    }
-    val avg = futures.map { case (pm, fs) =>
-      val foldMetrics = fs.map(Await.result(_, Duration.Inf))
-      val mean = foldMetrics.sum / k
-      logInfo(s"cv params=$pm mean=$mean folds=${foldMetrics.mkString(",")}")
-      (pm, mean)
-    }
-    pool.shutdown()
+      futures.map { case (pm, fs) =>
+        val foldMetrics = fs.map(Await.result(_, Duration.Inf))
+        val mean = foldMetrics.sum / k
+        logInfo(s"cv params=$pm mean=$mean folds=${foldMetrics.mkString(",")}")
+        (pm, mean)
+      }
+    } finally { pool.shutdown(); folded.unpersist() }
     val (bestParams, bestMetric) =
       avg.maxBy(x => if (eval.isLargerBetter) x._2 else -x._2)
     logInfo(s"cv best=$bestParams metric=$bestMetric — refitting on full data")
-    folded.unpersist()
     est.copy(bestParams).fit(df).asInstanceOf[Transformer]
   }
 }

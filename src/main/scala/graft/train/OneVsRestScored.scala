@@ -49,20 +49,23 @@ class OneVsRestScored(override val uid: String)
     val numClasses =
       dataset.select(max(col($(labelCol)).cast("double"))).head().getDouble(0).toInt + 1
     val df = dataset.select(col($(featuresCol)), col($(labelCol)).cast("double")).cache()
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool($(parallelism)))
-    val futures = (0 until numClasses).map { k =>
-      Future {
-        val bin = df.withColumn("__ovr_label",
-          when(col($(labelCol)) === k, 1.0).otherwise(0.0))
-        val est = $(classifier).copy(ParamMap.empty).asInstanceOf[Classifier[_, _, _]]
-        est.set(est.getParam("labelCol"), "__ovr_label")
-        est.set(est.getParam("featuresCol"), $(featuresCol))
-        est.fit(bin).asInstanceOf[ClassificationModel[Vector, _]]
+    // the pool is per fit and shut down however the fit ends: its threads
+    // are non-daemon, so a leaked pool keeps the JVM alive after main
+    val pool = java.util.concurrent.Executors.newFixedThreadPool($(parallelism))
+    val models = try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val futures = (0 until numClasses).map { k =>
+        Future {
+          val bin = df.withColumn("__ovr_label",
+            when(col($(labelCol)) === k, 1.0).otherwise(0.0))
+          val est = $(classifier).copy(ParamMap.empty).asInstanceOf[Classifier[_, _, _]]
+          est.set(est.getParam("labelCol"), "__ovr_label")
+          est.set(est.getParam("featuresCol"), $(featuresCol))
+          est.fit(bin).asInstanceOf[ClassificationModel[Vector, _]]
+        }
       }
-    }
-    val models = futures.map(Await.result(_, Duration.Inf)).toArray
-    df.unpersist()
+      futures.map(Await.result(_, Duration.Inf)).toArray
+    } finally { pool.shutdown(); df.unpersist() }
     val m = new OneVsRestScoredModel(uid, models)
     copyValues(m).setParent(this)
   }

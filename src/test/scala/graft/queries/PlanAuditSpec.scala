@@ -366,4 +366,34 @@ class PlanAuditSpec extends SparkSpec {
     p should not include "CartesianProduct"
     p should not include "SinglePartition"
   }
+
+  /** The UDF, codec and kernel expressions in the optimized plan of the
+    * last execution `action` runs: ScalaUDFs, object invocations, md5 and
+    * the engine's own Catalyst kernels. */
+  private def kernelsOf(action: => Unit): Set[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Md5, ScalaUDF}
+    import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+    graft.PlanDump.executions(spark)(action).last._2.optimizedPlan
+      .collectWithSubqueries { case p => p.expressions }
+      .flatten.flatMap(_.collect {
+        case u: ScalaUDF => "udf " + u.udfName.getOrElse(u.function.getClass.getName)
+        case i: Invoke => "invoke " + i.functionName
+        case i: StaticInvoke => "invoke " + i.functionName
+        case _: Md5 => "md5"
+        case e if e.getClass.getName.startsWith("graft.") => "kernel " + e.prettyName
+      }).toSet
+  }
+
+  it should "time what Verify writes: the bench action keeps every UDF and kernel" in {
+    val out = java.nio.file.Files.createTempDirectory("graft-bench-audit").toString
+    for (name <- Seq("doc_winnow", "gram_assemble")) {
+      val fn = graft.SparkEntry.queries(name)
+      val verified = kernelsOf(graft.Verify.write(fn(spark, dir), s"$out/$name"))
+      val timed = kernelsOf(graft.Bench.materialize(fn(spark, dir)))
+      withClue(s"$name: ") {
+        verified should not be empty
+        (verified -- timed) shouldBe empty
+      }
+    }
+  }
 }

@@ -93,6 +93,23 @@ class TrainSpec extends SparkSpec {
     acc should be > 0.95
   }
 
+  it should "leave no thread of its fit pool alive once fit returns" in {
+    import scala.jdk.CollectionConverters._
+    def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    val df = blobs(20)
+    val indexed = new org.apache.spark.ml.feature.StringIndexer()
+      .setInputCol("y").setOutputCol("label").fit(df).transform(df)
+    val before = nonDaemon()
+    new OneVsRestScored().setClassifier(new LogisticRegression().setMaxIter(5))
+      .fit(indexed)
+    // a shut-down pool's idle workers exit promptly but asynchronously
+    val deadline = System.currentTimeMillis() + 10000
+    while ((nonDaemon() -- before).nonEmpty && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    (nonDaemon() -- before).map(_.getName) shouldBe empty
+  }
+
   behavior of "PlattScalar"
 
   it should "calibrate SVM margins into well-ordered probabilities" in {
